@@ -18,6 +18,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from validatelite_spark import scale
 from validatelite_spark.functions.textquality import (
     EN_STOPWORDS,
     GOPHER_DEFAULTS,
@@ -48,11 +49,8 @@ def _utc(spark: SparkSession) -> None:
 #: maxPartitionBytes/minPartitionNum setting ever parallelizes the scan
 #: and every projection/partial-agg above it runs on ONE core. Spread
 #: once right after the read (guide §2.5: "input skew — one huge
-#: unsplittable file … repartition immediately after the read"). The
-#: repartition is CONDITIONAL on the scan actually under-parallelizing,
-#: so at production scale (many row groups per file) it is a no-op, and
-#: the target count derives from the session's parallelism, not a
-#: constant.
+#: unsplittable file … repartition immediately after the read");
+#: ``scale.spread`` is a no-op when the scan is already parallel.
 _SPREAD_TABLES = {"documents"}
 
 
@@ -60,8 +58,8 @@ def _read(spark: SparkSession, sf_dir: str, table: str,
           spread: bool = True) -> DataFrame:
     df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
     if spread and table in _SPREAD_TABLES:
-        par = spark.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() < par // 2:
+        spread_df = scale.spread(df)
+        if spread_df is not df:
             # The always-true nondeterministic filter is a PUSHDOWN
             # FENCE: without it Catalyst pushes every downstream
             # deterministic predicate below this exchange, and a filter
@@ -71,8 +69,7 @@ def _read(spark: SparkSession, sf_dir: str, table: str,
             # calibration_curve at sf1.0. Predicates cannot be
             # reordered before a nondeterministic one, so everything
             # evaluates above the spread, in parallel.
-            df = (df.repartition(par)
-                  .filter(F.monotonically_increasing_id() >= 0))
+            df = spread_df.filter(F.monotonically_increasing_id() >= 0)
     return df
 
 

@@ -105,14 +105,6 @@ class TestShingleSeam:
         # the stage really was written and re-read
         assert spark.read.parquet(stage).columns == ["k", "sh", "sz"]
 
-    def test_disk_only_level(self, cluster_docs):
-        got = sorted(map(tuple, dedup.minhash_lsh_pairs(
-            cluster_docs, storage_level="DISK_ONLY",
-            bucket_cap=5).collect()))
-        want = sorted(map(tuple, dedup.minhash_lsh_pairs(
-            cluster_docs, bucket_cap=5).collect()))
-        assert got == want
-
 
 class TestAutoBlocks:
     def test_selection_rule(self):

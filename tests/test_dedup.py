@@ -62,20 +62,20 @@ class TestDedupGroups:
         assert a == b
         assert any(os.scandir(ckpt))  # checkpoint files were written
 
-    def test_keep_representatives_no_broadcast_over_threshold(self, docs):
-        # Round-3 verdict #2: above the size gate the groups side must
-        # NOT broadcast (billions of group rows at web scale).
+    def test_keep_representatives_no_broadcast_over_threshold(
+            self, docs, no_auto_broadcast, final_plan):
+        # Round-3 verdict #2: a groups table over the session's
+        # broadcast threshold must NOT broadcast (billions of group rows
+        # at web scale); -1 puts every table over it.
         pairs = dedup.minhash_lsh_pairs(docs, threshold=0.7)
-        groups = dedup.dedup_groups(pairs)
-        kept_b = dedup.keep_representatives(docs, groups, broadcast=True)
-        kept_s = dedup.keep_representatives(docs, groups,
-                                            broadcast_threshold=0)
-        plan_b = kept_b._jdf.queryExecution().executedPlan().toString()
-        plan_s = kept_s._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastExchange" in plan_b
-        assert "BroadcastExchange" not in plan_s
+        kept_b = dedup.keep_representatives(docs, dedup.dedup_groups(pairs))
+        assert "BroadcastExchange" in final_plan(kept_b)
+        with no_auto_broadcast():
+            kept_s = dedup.keep_representatives(docs,
+                                                dedup.dedup_groups(pairs))
+            assert "BroadcastExchange" not in final_plan(kept_s)
+            b = sorted(r["doc_id"] for r in kept_s.select("doc_id").collect())
         a = sorted(r["doc_id"] for r in kept_b.select("doc_id").collect())
-        b = sorted(r["doc_id"] for r in kept_s.select("doc_id").collect())
         assert a == b
 
     def test_keep_representatives(self, docs):
@@ -108,19 +108,19 @@ class TestDedupGroups:
             df, groups, "score").collect())
         assert kept == [4]
 
-    def test_keep_best_no_broadcast_over_threshold(self, spark):
+    def test_keep_best_no_broadcast_over_threshold(
+            self, spark, no_auto_broadcast, final_plan):
         groups = spark.createDataFrame(
             [(1, 1), (2, 1)], "doc_id long, group_id long")
         df = spark.createDataFrame(
             [(1, 1.0), (2, 2.0), (3, 3.0)], "doc_id long, score double")
-        kept_b = dedup.keep_best_representatives(
-            df, groups, "score", broadcast=True)
-        kept_s = dedup.keep_best_representatives(
-            df, groups, "score", broadcast_threshold=0)
-        plan_s = kept_s._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastExchange" not in plan_s
-        assert (sorted(r.doc_id for r in kept_b.collect())
-                == sorted(r.doc_id for r in kept_s.collect()) == [2, 3])
+        kept_b = dedup.keep_best_representatives(df, groups, "score")
+        assert "BroadcastExchange" in final_plan(kept_b)
+        with no_auto_broadcast():
+            kept_s = dedup.keep_best_representatives(df, groups, "score")
+            assert "BroadcastExchange" not in final_plan(kept_s)
+            s = sorted(r.doc_id for r in kept_s.collect())
+        assert sorted(r.doc_id for r in kept_b.collect()) == s == [2, 3]
 
 
 class TestExactDedup:

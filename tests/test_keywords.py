@@ -83,7 +83,7 @@ class TestDomainTopTerms:
         assert plan.count("InMemoryTableScan") >= 3
         # (no inverse assertion: once cached, Spark's CacheManager
         # substitutes the fragment into ANY matching plan in the
-        # session, including storage_level=None calls)
+        # session)
 
     def test_rank_ties_deterministic(self, spark):
         from validatelite_spark.operators.keywords import domain_top_terms

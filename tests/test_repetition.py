@@ -97,31 +97,26 @@ def test_contaminated_docs_broadcasts_benchmark(spark, sf_dir):
     assert "SortMergeJoin" not in plan
 
 
-def test_contaminated_docs_size_gated_shuffle_branch(spark, sf_dir):
+def test_contaminated_docs_size_gated_shuffle_branch(
+        spark, sf_dir, no_auto_broadcast, final_plan):
     """Over-threshold benchmarks must NOT broadcast (VERDICT r2 #4: the
-    corpus-vs-corpus configuration would broadcast ~TBs at scale).
-    broadcast=False and an auto-gate miss both fall back to a shuffled
-    sort-merge join — and the results are identical to the broadcast
-    branch."""
+    corpus-vs-corpus configuration would broadcast ~TBs at scale). A
+    benchmark over the session's broadcast threshold (-1 puts every
+    table over it) falls back to a shuffled sort-merge join — and the
+    results are identical to the broadcast branch."""
     df = spark.read.parquet(f"{sf_dir}/documents.parquet")
     is_bench = F.substring(
         F.md5(F.col("doc_id").cast("string")), 1, 1) == "0"
     docs, bench = df.filter(~is_bench), df.filter(is_bench)
 
-    forced = contaminated_docs(docs, bench, n=4, broadcast=False)
-    plan = forced._jdf.queryExecution().executedPlan().toString()
-    assert "SortMergeJoin" in plan
-    assert "BroadcastExchange" not in plan
+    with no_auto_broadcast():
+        shuffled = contaminated_docs(docs, bench, n=4)
+        plan = final_plan(shuffled)
+        assert "SortMergeJoin" in plan
+        assert "BroadcastExchange" not in plan
+        b = sorted(map(tuple, shuffled.collect()))
 
-    # auto mode with a 1-n-gram threshold must pick the shuffled branch
-    auto = contaminated_docs(docs, bench, n=4, broadcast=None,
-                             broadcast_threshold=1)
-    plan2 = auto._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastExchange" not in plan2
-
-    a = sorted(map(tuple, contaminated_docs(docs, bench, n=4,
-                                            broadcast=True).collect()))
-    b = sorted(map(tuple, forced.collect()))
+    a = sorted(map(tuple, contaminated_docs(docs, bench, n=4).collect()))
     assert a == b
 
 

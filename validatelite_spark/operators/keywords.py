@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from validatelite_spark.scale import seam
+
 
 def domain_term_counts(
     df: DataFrame,
@@ -61,7 +63,6 @@ def domain_top_terms(
     min_df: int = 1,
     stopwords=None,
     round_to: int = 6,
-    storage_level: str | None = "MEMORY_AND_DISK",
 ) -> DataFrame:
     """Top-``top_k`` terms per domain by smoothed TF-IDF:
     (domain, term, tf, tfidf). ``min_df`` drops terms seen in fewer
@@ -72,16 +73,12 @@ def domain_top_terms(
     The (domain, term, tf) table feeds THREE consumers (domain
     frequency, the N-domains scalar, and the scoring join) and AQE
     does NOT reuse the exchange across them — unpersisted, the
-    corpus-wide explode+aggregate runs three times (measured).
-    ``storage_level`` persists the vocab-sized table once instead
-    (None to disable in no-cache contexts)."""
+    corpus-wide explode+aggregate runs three times (measured). The
+    vocab-sized table is persisted once instead (``scale.seam``)."""
     tf = domain_term_counts(df, text_col, by)
     if stopwords:
         tf = tf.filter(~F.col("term").isin(list(stopwords)))
-    if storage_level is not None:
-        from pyspark import StorageLevel
-
-        tf = tf.persist(getattr(StorageLevel, storage_level))
+    tf = seam(tf)
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     if min_df > 1:
         dfreq = dfreq.filter(F.col("df") >= min_df)

@@ -20,13 +20,12 @@ Scale shape (100 TB):
   — no global hot key, and partial aggregation collapses repeats
   map-side before the exchange.
 * decontamination: benchmark n-gram sets are MBs (eval suites), the
-  corpus is the 100 TB side — so the benchmark set is broadcast and the
-  corpus-side exploded n-grams join map-side without ever shuffling.
-  The broadcast is SIZE-GATED (``contaminated_docs(broadcast=None)``
-  counts the benchmark's distinct n-grams first): a corpus-sized
-  "benchmark" (e.g. corpus-vs-corpus overlap checks) would otherwise
-  broadcast terabytes — above the threshold the join falls back to a
-  shuffled sort-merge join, which scales with both sides.
+  corpus is the 100 TB side — so the planner broadcasts the benchmark
+  set and the corpus-side exploded n-grams join map-side without ever
+  shuffling. The join is a plain equi-join: a corpus-sized "benchmark"
+  (e.g. corpus-vs-corpus overlap checks) does not fit the session's
+  broadcast threshold, and there the join shuffles both sides, which
+  scales with both. No count runs while the plan is built.
 """
 
 from __future__ import annotations
@@ -184,12 +183,6 @@ def repetition_signals(
     )
 
 
-#: auto mode broadcasts the benchmark n-gram set only below this many
-#: distinct n-grams (~8M 8-gram strings ≈ 500 MB serialized — the edge
-#: of sane broadcast territory on big executors)
-BROADCAST_NGRAM_THRESHOLD = 8_000_000
-
-
 def top_ngrams(
     docs: DataFrame,
     text_col: str = "text",
@@ -233,23 +226,18 @@ def contaminated_docs(
     min_hits: int = 1,
     bench_text_col: str | None = None,
     arrow: bool = True,
-    broadcast: bool | None = None,
-    broadcast_threshold: int = BROADCAST_NGRAM_THRESHOLD,
 ) -> DataFrame:
     """Documents sharing ≥ ``min_hits`` distinct word n-grams with a
     benchmark corpus → ``(doc_id, hit_ngrams, overlap_frac)`` where
     ``overlap_frac`` is the share of the doc's distinct n-grams found in
     the benchmark.
 
-    Join strategy is size-gated. ``broadcast=True`` broadcasts the
-    benchmark's distinct n-gram set (eval suites are MBs; the corpus
-    side joins map-side and never shuffles its n-grams — only per-doc
-    hit counts move). ``broadcast=False`` forces a shuffled sort-merge
-    join — the right shape when the "benchmark" is itself corpus-sized
-    (corpus-vs-corpus overlap), where a broadcast would ship terabytes
-    to every executor. ``broadcast=None`` (default) counts the distinct
-    benchmark n-grams first (one cheap aggregate over the small side)
-    and broadcasts only under ``broadcast_threshold``.
+    The join strategy is the session's. An eval suite's distinct
+    n-gram set is MBs and fits the broadcast threshold: the corpus side
+    joins map-side and never shuffles its n-grams — only per-doc hit
+    counts move. A corpus-sized "benchmark" (corpus-vs-corpus overlap)
+    does not fit, and the join shuffles both sides instead of shipping
+    terabytes to every executor.
     """
     bcol = bench_text_col or text_col
     b_sh = (
@@ -257,22 +245,10 @@ def contaminated_docs(
         .select(F.explode("sh").alias("s"))
         .distinct()
     )
-    if broadcast is None:
-        # auto-gating runs one small-side job at plan-construction time
-        # (the benchmark is the small side by contract; callers that
-        # need full laziness pass broadcast= explicitly). The distinct
-        # n-gram set is CACHED across the gate count and the join —
-        # without it the benchmark-side Arrow shingling + distinct ran
-        # twice per call; the footprint is benchmark-bounded (MBs by
-        # contract, and the gate itself refuses to broadcast past
-        # ``broadcast_threshold``).
-        b_sh = b_sh.cache()
-        broadcast = b_sh.count() <= broadcast_threshold
-    bench_side = F.broadcast(b_sh) if broadcast else b_sh.hint("merge")
     d_tab = _shingle_table(docs, text_col, id_col, n, arrow=arrow)
     ex = d_tab.select("k", "sz", F.explode("sh").alias("s"))
     return (
-        ex.join(bench_side, "s")
+        ex.join(b_sh, "s")
         .groupBy("k")
         .agg(F.count(F.lit(1)).alias("hit_ngrams"),
              F.first("sz").alias("sz"))
@@ -296,8 +272,6 @@ def contamination_provenance(
     bench_text_col: str | None = None,
     bench_id_col: str | None = None,
     arrow: bool = True,
-    broadcast: bool | None = None,
-    broadcast_threshold: int = BROADCAST_NGRAM_THRESHOLD,
 ) -> DataFrame:
     """Which benchmark item leaked into which corpus doc:
     ``(doc_id, bench_id, hit_ngrams)`` — distinct word ``n``-grams
@@ -309,7 +283,7 @@ def contamination_provenance(
     ``similarity.embedding_decontaminate(mode='report')``, exact
     n-grams instead of embeddings).
 
-    Scale shape: same size-gated benchmark side as ``contaminated_docs``
+    Scale shape: same session-chosen join as ``contaminated_docs``
     but keyed (bench_id, shingle) instead of a distinct shingle set —
     the join fan-out per shingle is (corpus docs containing it) ×
     (benchmark docs containing it). A benchmark is an EVAL SUITE by
@@ -320,23 +294,15 @@ def contamination_provenance(
     ``n`` when the benchmark itself carries template text. The heavy
     aggregate groups on (doc, bench) pairs — map-side combinable,
     never a window."""
-    from validatelite_spark.operators.dedup import _shingle_table
-
     bcol = bench_text_col or text_col
     bid = bench_id_col or id_col
     b_tab = (_shingle_table(benchmark, bcol, bid, n, arrow=arrow)
              .select(F.col("k").alias("__bid"),
                      F.explode("sh").alias("s"))
              .distinct())
-    if broadcast is None:
-        # cached across the gate count and the join — same rationale
-        # (and bound) as contaminated_docs above
-        b_tab = b_tab.cache()
-        broadcast = b_tab.count() <= broadcast_threshold
-    bench_side = F.broadcast(b_tab) if broadcast else b_tab.hint("merge")
     ex = (_shingle_table(docs, text_col, id_col, n, arrow=arrow)
           .select("k", F.explode("sh").alias("s")))
-    return (ex.join(bench_side, "s")
+    return (ex.join(b_tab, "s")
             .groupBy("k", "__bid")
             .agg(F.count(F.lit(1)).alias("hit_ngrams"))
             .filter(F.col("hit_ngrams") >= min_hits)

@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 from validatelite_spark.functions.textquality import tokens
 from validatelite_spark.operators.dedup import DEFAULT_DF_CAP
 from validatelite_spark.operators.winnowing import _grams_arrow
+from validatelite_spark.scale import spread
 
 logger = logging.getLogger(__name__)
 
@@ -67,10 +68,7 @@ def positional_grams(df: DataFrame, text_col: str = "text",
                 F.sequence(F.lit(1), F.size(w) - n + 1),
                 lambda i: F.array_join(F.slice(w, i, F.lit(n)), " ")),
         ).otherwise(F.array().cast("array<string>"))
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par // 2:
-        df = df.repartition(par)
-    return (df.select(F.col(key_col).alias("k"), gs.alias("gs"))
+    return (spread(df).select(F.col(key_col).alias("k"), gs.alias("gs"))
             .filter(F.size("gs") > 0)
             .select("k", F.posexplode("gs").alias("pos0", "g"))
             .select("k", (F.col("pos0") + 1).alias("pos"), "g"))

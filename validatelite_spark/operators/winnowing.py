@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from validatelite_spark.operators.dedup import DEFAULT_DF_CAP, _expand_pairs
+from validatelite_spark.scale import seam
 
 logger = logging.getLogger(__name__)
 
@@ -131,7 +132,6 @@ def winnow_pairs(
     window: int = 4,
     min_shared: int = 2,
     df_cap: int | None = DEFAULT_DF_CAP,
-    storage_level: str | None = "MEMORY_AND_DISK",
 ) -> DataFrame:
     """(id1, id2, shared): unordered document pairs sharing at least
     ``min_shared`` distinct winnowed fingerprint hashes — the local
@@ -140,16 +140,14 @@ def winnow_pairs(
     stop-shingle contract as ``ngram_jaccard_pairs``).
 
     The fingerprint table feeds both the hot-fp aggregate and the
-    anti-join; AQE does not reuse that exchange, so ``storage_level``
-    persists the (selected, ~2/window of the grams) table once instead
-    of re-running the corpus-wide window+UDF selection per consumer."""
+    anti-join; AQE does not reuse that exchange, so the (selected,
+    ~2/window of the grams) table is persisted once (``scale.seam``)
+    instead of re-running the corpus-wide window+UDF selection per
+    consumer."""
     fps = (winnow_fingerprints(df, text_col, key_col, n, window)
            .select("k", "fp").distinct())
-    if storage_level is not None and df_cap is not None:
-        from pyspark import StorageLevel
-
-        fps = fps.persist(getattr(StorageLevel, storage_level))
     if df_cap is not None:
+        fps = seam(fps)
         hot = (fps.groupBy("fp").agg(F.count(F.lit(1)).alias("df"))
                .filter(F.col("df") > df_cap).select("fp").cache())
         n_hot = hot.count()

@@ -27,8 +27,10 @@ measured ~30% slower end-to-end at sf0.1.
 Because every stage is a pure DataFrame transformation, the composition
 is ONE Catalyst plan: the quality predicates evaluate in the scan
 projection, the dedup shuffle keys on the md5 fingerprint, and the
-budget's windows partition by (lang, bucket) — no materialization
-between stages unless the caller persists. The whole chain is
+budget's windows partition by (lang, bucket). The only materialization
+is the persist seam (``scale.seam``) where the plan branches: the kept
+survivors in front of the budget, and the deduped frame when the
+n-gram decontamination leg also reads it. The whole chain is
 DuckDB-verifiable (driver query ``curation_end_to_end``): keep
 predicate, fingerprint dedup, and running-sum cut replayed in SQL.
 """
@@ -43,6 +45,7 @@ from validatelite_spark.operators.dedup import exact_dedup, url_decontaminate
 from validatelite_spark.operators.sampling import token_budget_filter
 from validatelite_spark.pipeline.quality import (PipelineConfig,
                                                  QualityPipeline)
+from validatelite_spark.scale import seam
 
 
 def _standard_rules(text_col: str, allowed_langs) -> list:
@@ -72,7 +75,6 @@ def curate(
     decon_n: int = 8,
     decon_min_hits: int = 1,
     bench_text_col: str | None = None,
-    persist_intermediate: str | None = "MEMORY_AND_DISK",
 ) -> DataFrame:
     """[url-decontaminate →] quality-filter → exact-dedup →
     [n-gram-decontaminate →] per-``lang_col`` token budget.
@@ -91,34 +93,28 @@ def curate(
     - ``benchmark_texts``: after the keep filter, docs sharing ≥
       ``decon_min_hits`` distinct word ``decon_n``-grams with this
       corpus (must carry ``key_col`` — any unique id works) are
-      anti-joined away (``operators/repetition.contaminated_docs``,
-      size-gated broadcast). The contamination set is computed from the
-      DEDUPED frame, not the filtered one: contamination is a pure
+      anti-joined away (``operators/repetition.contaminated_docs``;
+      the eval suite's n-gram set broadcasts). The contamination set
+      is computed from the DEDUPED frame, not the filtered one:
+      contamination is a pure
       function of the text, so membership is a superset of what the
       kept docs need (exact for the anti-join), and the branch then
       re-evaluates only the cheap md5-dedup plan — never the
       regex-heavy rule projection (the same branch-recompute economics
       as running dedup physically first). Both legs precede the token
-      budget, which must only count surviving docs.
-
-    ``persist_intermediate``: storage level for the kept-survivors
-    materialization seam in front of the token budget (whose prefix
-    sums branch their input four ways); None restores the historical
-    fully-lazy single-plan composition."""
+      budget, which must only count surviving docs."""
     cfg = PipelineConfig(allowed_langs=allowed_langs, text_column=text_col)
     rules = _standard_rules(text_col, allowed_langs)
     d = docs
     if benchmark_urls is not None:
         d = url_decontaminate(d, benchmark_urls, url_col)
     uniq = exact_dedup(d, text_col, key_col)
-    if benchmark_texts is not None and persist_intermediate is not None:
+    if benchmark_texts is not None:
         # the deduped frame feeds BOTH the rule projection and the
         # n-gram decontamination leg — without a seam the one
         # materialization job evaluates the url-decon + dedup chain
         # twice (once per branch)
-        from pyspark import StorageLevel
-
-        uniq = uniq.persist(getattr(StorageLevel, persist_intermediate))
+        uniq = seam(uniq)
     ann = QualityPipeline(spark, cfg, rules).annotate(uniq)
     kept = ann.filter("keep").select(*docs.columns)
     if benchmark_texts is not None:
@@ -130,19 +126,15 @@ def curate(
                                  min_hits=decon_min_hits,
                                  bench_text_col=bench_text_col)
         kept = kept.join(cont.select(key_col), key_col, "left_anti")
-    if persist_intermediate is not None:
-        # The token budget's two-phase prefix sums reference their
-        # input from FOUR branches (group bounds, per-bucket sums,
-        # bucket offsets, the main stream) — without a materialization
-        # seam each branch re-runs the whole scan → dedup → regex-keep
-        # chain (8 parquet scans / 36 regexp evaluations in the sf1.0
-        # physical plan). Persisting the kept survivors evaluates the
-        # expensive projection once; pass None to keep the historical
-        # fully-lazy single-plan form (the DuckDB oracle replays the
-        # logical order either way — output is identical).
-        from pyspark import StorageLevel
-
-        kept = kept.persist(getattr(StorageLevel, persist_intermediate))
+    # The token budget's two-phase prefix sums reference their input
+    # from FOUR branches (group bounds, per-bucket sums, bucket offsets,
+    # the main stream) — without a materialization seam each branch
+    # re-runs the whole scan → dedup → regex-keep chain (8 parquet
+    # scans / 36 regexp evaluations in the sf1.0 physical plan).
+    # Persisting the kept survivors evaluates the expensive projection
+    # once (the DuckDB oracle replays the logical order — output is
+    # identical).
+    kept = seam(kept)
     return token_budget_filter(kept, token_budget, token_col,
                                by=lang_col, order_col=token_col,
                                key_col=key_col)
