@@ -325,7 +325,7 @@ class TestChunkBuilderParity:
                .select("doc_id", col_chunks.alias("c")).collect()}
 
         from pyspark.sql.functions import pandas_udf
-        from validatelite_spark.operators.dedup import _WS_ASCII
+        from validatelite_spark.functions.textquality import words
 
         @pandas_udf("array<string>")
         def chunks_arrow(texts: pd.Series) -> pd.Series:
@@ -334,7 +334,7 @@ class TestChunkBuilderParity:
                 if t is None:
                     out.append([])
                     continue
-                tk = [x for x in _WS_ASCII.split(t.lower()) if x]
+                tk = words(t)
                 out.append([" ".join(tk[i:i + w])
                             for i in range(0, len(tk), w)])
             return pd.Series(out)

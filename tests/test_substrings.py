@@ -95,7 +95,24 @@ def test_span_merge_overlapping(spark):
     assert out[30] == 15
 
 
-def test_arrow_column_parity(docs):
+def test_arrow_column_parity(spark, docs):
+    # edge whitespace beyond U+0020 must not shift the Column positions
+    edge = spark.createDataFrame(
+        [(6, "\tx y z w v"), (7, "x y z w\n"), (8, "\r\nx\ty z \x0bw v\f")],
+        "doc_id long, text string")
+    docs = docs.unionByName(edge)
     a = set(map(tuple, positional_grams(docs, n=4, arrow=True).collect()))
     c = set(map(tuple, positional_grams(docs, n=4, arrow=False).collect()))
-    assert a == c and a
+    assert a == c and {k for k, _, _ in a} >= {6, 7, 8}
+
+
+def test_scrub_cuts_span_after_leading_newline(spark):
+    # the Arrow grams place the span and the Column tokens are cut:
+    # both must agree that the leading newline is not a word
+    run = " ".join(f"w{i}" for i in range(20)) + " tail"
+    df = spark.createDataFrame([(1, run), (2, "\n" + run + " two")],
+                               "doc_id long, text string")
+    out = {r.doc_id: (r.scrubbed_text, r.words_cut)
+           for r in substring_scrub(df).collect()}
+    assert out[2] == ("two", 21)
+    assert out[1] == (run, 0)

@@ -45,12 +45,11 @@ def docs(spark):
 
 
 class TestFingerprints:
-    @pytest.mark.parametrize("arrow", [True, False])
-    def test_matches_reference(self, spark, docs, arrow):
+    def test_matches_reference(self, spark, docs):
         from validatelite_spark.operators.winnowing import \
             winnow_fingerprints
         got = {}
-        for r in winnow_fingerprints(docs, arrow=arrow).collect():
+        for r in winnow_fingerprints(docs).collect():
             got.setdefault(r["k"], set()).add((r["fp"], r["pos"]))
         want = {k: ref_winnow(t) for k, t in TEXTS.items() if ref_winnow(t)}
         assert got == want

@@ -87,10 +87,6 @@ def get_rule_type(name: Any) -> Optional[RuleTypeSpec]:
     return _REGISTRY.get(str(key).upper())
 
 
-def registered_rule_types() -> list[str]:
-    return sorted(_REGISTRY)
-
-
 def validate_params(spec: RuleTypeSpec, params: dict[str, Any]) -> None:
     """Check params against the spec's schema; raises ValueError (the
     Rule model wraps it into RuleValidationError)."""

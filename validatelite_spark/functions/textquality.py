@@ -14,29 +14,51 @@ ENUM→language allowlist after langid.
 
 from __future__ import annotations
 
+import re
+
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # ---------------------------------------------------------------- tokenize
+# The one word rule: a word is a maximal run of non-whitespace in the
+# lowercased text, whitespace being Java's ``\s`` set below. ``tokens``
+# is the Column half, ``words`` the Python half (every Arrow UDF builds
+# its grams on it), and __spark_entry__.py's DuckDB ``_d_tokens``
+# mirrors both.
+
+#: Java \s whitespace set (space \t \n \x0b \f \r)
+_WS = " \t\n\x0b\f\r"
+#: ASCII ``\s`` is exactly ``_WS``; str.split() would also split on
+#: Unicode separators (U+00A0, U+2028, ...) the Column half keeps
+_WS_RUN = re.compile(r"\s+", re.ASCII)
+
 
 def tokens(col: Column) -> Column:
-    """Whitespace tokens of lowercased text; empty text → empty array."""
-    t = F.trim(F.lower(col))
+    """Whitespace tokens of lowercased text; empty or all-whitespace
+    text → empty array, NULL → NULL. Edges are trimmed of the whole
+    ``_WS`` set (``F.trim`` strips only U+0020 and would leave a ``''``
+    token for a leading tab or newline)."""
+    t = F.btrim(F.lower(col), F.lit(_WS))
     return F.when(t == "", F.array().cast("array<string>")).otherwise(
         F.split(t, "\\s+"))
+
+
+def words(text: str) -> list[str]:
+    """Python twin of ``tokens`` for one non-NULL text."""
+    return [w for w in _WS_RUN.split(text.lower()) if w]
+
+
+def word_grams(toks: list[str], n: int) -> list[str]:
+    """Every word ``n``-gram of ``toks`` in order, duplicates kept;
+    fewer than ``n`` tokens → ``[]``."""
+    return [" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)]
 
 
 def token_count(col: Column) -> Column:
     return F.size(tokens(col))
 
 
-def char_count(col: Column) -> Column:
-    return F.length(col)
-
-
-#: Java \s whitespace set (space \t \n \x0b \f \r)
-_WS = " \t\n\x0b\f\r"
 _ALNUM = ("abcdefghijklmnopqrstuvwxyz"
           "ABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789")
 
@@ -63,12 +85,6 @@ def symbol_ratio(col: Column) -> Column:
     n = F.length(col)
     symbols = F.length(F.translate(col, _ALNUM + _WS, ""))
     return F.when(n > 0, symbols / n).otherwise(F.lit(0.0))
-
-
-def digit_ratio(col: Column) -> Column:
-    n = F.length(col)
-    digits = n - F.length(F.regexp_replace(col, "[0-9]", ""))
-    return F.when(n > 0, digits / n).otherwise(F.lit(0.0))
 
 
 def distinct_token_ratio(col: Column) -> Column:
@@ -223,19 +239,9 @@ def gopher_fail(col: Column, params: dict | None = None) -> Column:
 # pipeline/quality.py; the plain versions stay for ad-hoc single rules
 # and the DuckDB-oracle-checked query surface.
 
-def token_count_t(toks: Column) -> Column:
-    return F.size(toks)
-
-
 def mean_word_length_t(col: Column, toks: Column) -> Column:
     n = F.size(toks)
     return F.when(n > 0, non_space_char_count(col) / n).otherwise(F.lit(0.0))
-
-
-def stopword_count_t(col: Column, words: list[str] | None = None) -> Column:
-    # regexp_count over the raw text is codegen'd; the token-array HOF
-    # form is CodegenFallback (see _word_set_pattern)
-    return stopword_count(col, words)
 
 
 def distinct_token_ratio_t(toks: Column) -> Column:

@@ -34,14 +34,14 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from validatelite_spark.functions.textquality import tokens
+from validatelite_spark.functions.textquality import tokens, word_grams, words
 from validatelite_spark.operators.dedup import _shingle_table
 
 
 def ngrams_all(col: Column, n: int = 3) -> Column:
-    """ALL word n-gram occurrences (lowercased, whitespace-tokenized),
-    duplicates preserved — unlike ``dedup.shingles`` which is a distinct
-    set.  Docs with < n tokens produce an empty array."""
+    """ALL word n-gram occurrences of ``tokens``, in order, duplicates
+    preserved — unlike ``dedup.shingles_arrow`` which is a distinct set.
+    Docs with < n tokens produce an empty array."""
     toks = tokens(col)
     k = F.size(toks) - F.lit(n - 1)
     return F.when(k <= 0, F.array().cast("array<string>")).otherwise(
@@ -53,27 +53,18 @@ def ngrams_all(col: Column, n: int = 3) -> Column:
 
 
 def ngrams_all_arrow(n: int = 3):
-    """Arrow-batched variant of ``ngrams_all`` — same values, built in
-    tight Python per batch instead of a CodegenFallback HOF chain
-    (BENCH.md lesson 2).  Default path for the DataFrame operators."""
+    """Arrow-batched ``ngrams_all`` — same values (``word_grams`` over
+    ``textquality.words``; NULL → empty array), built in tight Python
+    per batch instead of a CodegenFallback HOF chain (BENCH.md lesson
+    2).  The ordered gram builder of every DataFrame operator here and
+    of ``winnowing`` / ``substrings``, whose positions index the same
+    word sequence as the Column ``tokens``."""
     from pyspark.sql.functions import pandas_udf
-
-    from validatelite_spark.operators.dedup import _WS_ASCII
 
     @pandas_udf("array<string>")
     def ng(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            if t is None:
-                out.append([])
-                continue
-            toks = [x for x in _WS_ASCII.split(t.lower()) if x]
-            if len(toks) < n:
-                out.append([])
-                continue
-            out.append([" ".join(toks[i:i + n])
-                        for i in range(len(toks) - n + 1)])
-        return pd.Series(out)
+        return pd.Series([[] if t is None else word_grams(words(t), n)
+                          for t in texts])
 
     return ng
 
@@ -102,8 +93,6 @@ def dup_ngram_fraction_arrow(n: int = 3):
     measured ~40× slower on the metrics scan."""
     from pyspark.sql.functions import pandas_udf
 
-    from validatelite_spark.operators.dedup import _WS_ASCII
-
     @pandas_udf("double")
     def frac(texts: pd.Series) -> pd.Series:
         out = []
@@ -111,14 +100,9 @@ def dup_ngram_fraction_arrow(n: int = 3):
             if t is None:
                 out.append(None)
                 continue
-            toks = [x for x in _WS_ASCII.split(t.lower()) if x]
-            total = len(toks) - n + 1
-            if total <= 0:
-                out.append(0.0)
-                continue
-            distinct = len({" ".join(toks[i:i + n])
-                            for i in range(total)})
-            out.append(1.0 - distinct / total)
+            grams = word_grams(words(t), n)
+            out.append(1.0 - len(set(grams)) / len(grams) if grams
+                       else 0.0)
         return pd.Series(out)
 
     return frac
@@ -149,7 +133,6 @@ def repetition_signals(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 3,
-    arrow: bool = True,
 ) -> DataFrame:
     """Per-document n-gram repetition metrics:
 
@@ -163,8 +146,7 @@ def repetition_signals(
     Two-level aggregation: count per (doc, ngram), then roll up per doc —
     both partial-agg map-side; see module docstring for the scale story.
     """
-    ng = (ngrams_all_arrow(n)(F.col(text_col)) if arrow
-          else ngrams_all(F.col(text_col), n))
+    ng = ngrams_all_arrow(n)(F.col(text_col))
     ex = df.select(F.col(id_col), F.explode(ng).alias("s"))
     per = ex.groupBy(id_col, "s").agg(F.count(F.lit(1)).alias("c"))
     return (
@@ -225,7 +207,6 @@ def contaminated_docs(
     n: int = 8,
     min_hits: int = 1,
     bench_text_col: str | None = None,
-    arrow: bool = True,
 ) -> DataFrame:
     """Documents sharing ≥ ``min_hits`` distinct word n-grams with a
     benchmark corpus → ``(doc_id, hit_ngrams, overlap_frac)`` where
@@ -241,11 +222,11 @@ def contaminated_docs(
     """
     bcol = bench_text_col or text_col
     b_sh = (
-        _shingle_table(benchmark, bcol, id_col, n, arrow=arrow)
+        _shingle_table(benchmark, bcol, id_col, n)
         .select(F.explode("sh").alias("s"))
         .distinct()
     )
-    d_tab = _shingle_table(docs, text_col, id_col, n, arrow=arrow)
+    d_tab = _shingle_table(docs, text_col, id_col, n)
     ex = d_tab.select("k", "sz", F.explode("sh").alias("s"))
     return (
         ex.join(b_sh, "s")
@@ -271,7 +252,6 @@ def contamination_provenance(
     min_hits: int = 1,
     bench_text_col: str | None = None,
     bench_id_col: str | None = None,
-    arrow: bool = True,
 ) -> DataFrame:
     """Which benchmark item leaked into which corpus doc:
     ``(doc_id, bench_id, hit_ngrams)`` — distinct word ``n``-grams
@@ -296,11 +276,11 @@ def contamination_provenance(
     never a window."""
     bcol = bench_text_col or text_col
     bid = bench_id_col or id_col
-    b_tab = (_shingle_table(benchmark, bcol, bid, n, arrow=arrow)
+    b_tab = (_shingle_table(benchmark, bcol, bid, n)
              .select(F.col("k").alias("__bid"),
                      F.explode("sh").alias("s"))
              .distinct())
-    ex = (_shingle_table(docs, text_col, id_col, n, arrow=arrow)
+    ex = (_shingle_table(docs, text_col, id_col, n)
           .select("k", F.explode("sh").alias("s")))
     return (ex.join(b_tab, "s")
             .groupBy("k", "__bid")

@@ -405,7 +405,6 @@ def ivf_topk(
     round_to: int = 6,
     refine_iters: int = 0,
     centroids: list[list[float]] | None = None,
-    arrow: bool = False,
 ) -> DataFrame:
     """IVF-style ANN: corpus vectors are assigned to their
     nearest-centroid bucket ONCE (argmax of centroid dots — pure Column
@@ -420,7 +419,9 @@ def ivf_topk(
 
     This call assigns the corpus at query time; for the 100 TB shape —
     assign ONCE, probe many times against a partition-pruned scan — use
-    ``ivf_index_write`` + ``ivf_index_probe``."""
+    ``ivf_index_write`` + ``ivf_index_probe``. Candidates are scored
+    with the pure-Column cosine, the oracle-replayable anchor that
+    ``ivf_index_probe``'s Arrow scoring is pinned against."""
     if centroids is not None:
         cents = centroids
     elif refine_iters > 0:
@@ -446,7 +447,7 @@ def ivf_topk(
     scored = (
         c.join(F.broadcast(q), "bucket")
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("score", _candidate_score(round_to, arrow))
+        .withColumn("score", _candidate_score(round_to, arrow=False))
     )
     w = Window.partitionBy("query_id").orderBy(
         F.desc("score"), F.col("neighbor_id"))

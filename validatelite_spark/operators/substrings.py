@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 
 from validatelite_spark.functions.textquality import tokens
 from validatelite_spark.operators.dedup import DEFAULT_DF_CAP
-from validatelite_spark.operators.winnowing import _grams_arrow
+from validatelite_spark.operators.repetition import ngrams_all_arrow
 from validatelite_spark.scale import spread
 
 logger = logging.getLogger(__name__)
@@ -57,9 +57,10 @@ def positional_grams(df: DataFrame, text_col: str = "text",
     word position. ``arrow=True`` builds the gram array in one Arrow
     batch (hot path — CLAUDE.md rule 3 keeps higher-order functions out
     of corpus-wide projections); False keeps a pure-Column expression
-    for no-Python contexts."""
+    over ``tokens`` for no-Python contexts. Both index the one word
+    sequence ``substring_scrub`` cuts from."""
     if arrow:
-        gs = _grams_arrow(n)(F.col(text_col))
+        gs = ngrams_all_arrow(n)(F.col(text_col))
     else:
         w = tokens(F.col(text_col))
         gs = F.when(
@@ -151,7 +152,6 @@ def exact_substring_pairs(
     min_words: int = 15,
     df_cap: int | None = DEFAULT_DF_CAP,
     log_dropped: bool = True,
-    arrow: bool = True,
 ) -> DataFrame:
     """Document pairs sharing an exact word run of >= ``min_words``
     words: (id1, id2, overlap_words, n_runs) with id1 < id2,
@@ -162,7 +162,7 @@ def exact_substring_pairs(
     plays the role of Lee et al.'s 50-token report threshold — at web
     scale raise both (n=15, min_words=50) so the seed table carries
     fewer, longer grams."""
-    pg = positional_grams(df, text_col, key_col, n, arrow=arrow)
+    pg = positional_grams(df, text_col, key_col, n)
     runs = _diagonal_runs(_seed_pairs(pg, df_cap, log_dropped), n)
     return (runs.groupBy("id1", "id2")
             .agg(F.max("run_words").alias("overlap_words"),
@@ -179,7 +179,6 @@ def duplicate_spans(
     n: int = 8,
     min_words: int = 15,
     df_cap: int | None = DEFAULT_DF_CAP,
-    arrow: bool = True,
 ) -> DataFrame:
     """Merged word spans to CUT per document: (k, start, end) 1-based
     inclusive word ranges duplicated verbatim elsewhere in the corpus.
@@ -191,7 +190,7 @@ def duplicate_spans(
     keeps its id1-side span (it is the earlier doc there). Overlapping
     or adjacent spans within a document are merged (gaps-and-islands on
     the running max end) so the scrub step cuts each word once."""
-    pg = positional_grams(df, text_col, key_col, n, arrow=arrow)
+    pg = positional_grams(df, text_col, key_col, n)
     runs = _diagonal_runs(_seed_pairs(pg, df_cap, False), n)
     spans = (runs.filter(F.col("run_words") >= min_words)
              .select(F.col("id2").alias("k"),
@@ -222,7 +221,6 @@ def substring_scrub(
     n: int = 8,
     min_words: int = 15,
     df_cap: int | None = DEFAULT_DF_CAP,
-    arrow: bool = True,
 ) -> DataFrame:
     """Cut every duplicated span (keep-first policy of
     ``duplicate_spans``) out of each document's TOKEN stream:
@@ -237,8 +235,7 @@ def substring_scrub(
     bounded per doc), re-aggregate in position order. Only documents
     WITH spans pay the explode; the rest is a broadcast-size anti-join
     at typical duplication rates (spans exist for a few % of docs)."""
-    spans = duplicate_spans(df, text_col, key_col, n, min_words, df_cap,
-                            arrow=arrow)
+    spans = duplicate_spans(df, text_col, key_col, n, min_words, df_cap)
     toks = tokens(F.col(text_col))
     base = df.select(F.col(key_col).alias("k"),
                      toks.alias("w"),

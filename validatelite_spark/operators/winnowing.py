@@ -33,44 +33,16 @@ from __future__ import annotations
 
 import logging
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from validatelite_spark.operators.dedup import DEFAULT_DF_CAP, _expand_pairs
+from validatelite_spark.operators.repetition import ngrams_all_arrow
 from validatelite_spark.scale import seam
 
 logger = logging.getLogger(__name__)
 
 _POS_MOD = 1 << 20  # max supported n-grams per document
-
-
-def _grams_arrow(n: int):
-    """ORDERED word n-grams with duplicates (winnowing needs the
-    sequence, unlike the deduped shingle SET) — one Arrow batch,
-    keeping the higher-order-function chain out of the corpus-wide
-    projection (CLAUDE.md rule 3).
-
-    Tokenizer is ``_WS_ASCII`` (= Java ``\\s``), NOT ``str.split()``
-    (Unicode whitespace): the positions this builder emits are
-    consumed by ``substring_scrub``, which cuts spans out of the
-    Column-path ``tokens()`` sequence — a Unicode-only separator
-    (U+00A0 etc.) would shift every later position and scrub the wrong
-    words (ADVICE r05 #1). Matches ``shingles_arrow``'s convention."""
-    from validatelite_spark.operators.dedup import _WS_ASCII
-
-    @F.pandas_udf("array<string>")
-    def g(s: pd.Series) -> pd.Series:
-        out = []
-        for t in s:
-            if t is None:
-                out.append([])
-                continue
-            toks = [x for x in _WS_ASCII.split(t.lower()) if x]
-            out.append([" ".join(toks[i:i + n])
-                        for i in range(len(toks) - n + 1)])
-        return pd.Series(out)
-    return g
 
 
 def winnow_fingerprints(
@@ -79,26 +51,17 @@ def winnow_fingerprints(
     key_col: str = "doc_id",
     n: int = 2,
     window: int = 4,
-    arrow: bool = True,
 ) -> DataFrame:
     """(k, fp, pos): the winnowed fingerprint set per document —
     fp the selected 32-bit n-gram hash, pos its n-gram index.
-    ``arrow=False`` keeps the pure-Column gram chain (no-Python
-    contexts / the oracle-anchor plan); both produce identical rows."""
+
+    Grams are ``repetition.ngrams_all_arrow``: ORDERED, duplicates kept
+    (winnowing needs the sequence, unlike the deduped shingle SET),
+    built in one Arrow batch so the higher-order-function chain stays
+    out of the corpus-wide projection (BENCH.md lesson 2)."""
     if window < 1 or n < 1:
         raise ValueError("n and window must be >= 1")
-    if arrow:
-        grams = _grams_arrow(n)(F.col(text_col))
-    else:
-        toks = F.split(F.lower(F.col(text_col)), r"\s+")
-        toks = F.filter(toks, lambda t: t != "")
-        # sequence(0, negative) DESCENDS in Spark — guard short docs
-        grams = F.when(
-            F.size(toks) >= n,
-            F.transform(
-                F.sequence(F.lit(0), F.size(toks) - n),
-                lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)))
-        ).otherwise(F.array().cast("array<string>"))
+    grams = ngrams_all_arrow(n)(F.col(text_col))
     base = (df.filter(F.col(text_col).isNotNull())
             .select(F.col(key_col).alias("k"), grams.alias("g"))
             .filter(F.size("g") >= 1)
